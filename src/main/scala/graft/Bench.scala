@@ -214,8 +214,8 @@ object Bench {
     // BEFORE it for console readability; build.sbt strips sbt's
     // "[info] " prefix from forked run output and suppresses the
     // "[success] Total time" trailer so nothing follows the contract
-    // line. Both prints happen after artifact persistence and
-    // spark.stop() so no late log write can land after them.
+    // line. Both prints happen after artifact persistence and before
+    // spark.stop().
     val json = s"""{"metric":"total","queries":${fmt(pass2)},"pass1":${fmt(pass1)},"anomalies":$anomaliesJson,"value":$t2,"unit":"sec","sf":"$sfDir","n_queries":${names.size},"pass1_total":$t1,"pass2_total":$t2,"failed_pass1":$f1,"failed_pass2":$f2,"n_anomalies":${anomalies.size},"env":$envJson}"""
     val famTotals = pass2.groupBy { case (n, _) => familyOf(n) }.toSeq
       .sortBy(_._1)
@@ -278,13 +278,16 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not persist JSON: ${e.getMessage}")
     }
+    // The two stdout lines — compact per-family summary for the console,
+    // then the full contract line as the final line — go out BEFORE
+    // spark.stop(), so a hang during stop cannot lose them. Spark logs to
+    // stderr, so nothing stop() prints can follow them on stdout.
+    println(famJson)
+    println(json)
+    System.out.flush()
     try spark.stop()
     catch { case e: Throwable =>
       System.err.println(s"[bench] spark.stop failed: ${e.getMessage}")
     }
-    // LAST act: the two stdout lines — compact per-family summary for
-    // the console, then the full contract line as the final line.
-    println(famJson)
-    println(json)
   }
 }

@@ -264,25 +264,20 @@ object PipelineCli {
 
   /** The reference's resume-from-last-stored walk, fleet-wide: plan the
     * missing hours per site, execute against the feed table with
-    * gap-stop + validation, append to the day-partitioned store.
+    * gap-stop + validation, append to the day-partitioned store. Only the
+    * stored days the walk can touch are read
+    * ([[NmdbCatchup.catchupFromStore]]).
     */
   def runNmdbCatchup(spark: SparkSession, c: Config): Unit = {
     val now = c.now.getOrElse(
       new java.sql.Timestamp(System.currentTimeMillis()))
-    def table(name: String) = {
-      val df = spark.read.parquet(s"${c.input}/$name")
+    def table(path: String) = {
+      val df = spark.read.parquet(path)
       c.site.fold(df)(s => df.filter(col("site_no") === s))
     }
-    val intensity = table("intensity")
-    val raw = table("raw_values")
-    val feed = {
-      val df = spark.read.parquet(c.feed)
-      c.site.fold(df)(s => df.filter(col("site_no") === s))
-    }
-    val nowHour = date_trunc("hour", lit(now))
-    val plan = NmdbCatchup.fetchPlan(intensity, raw, nowHour,
-      c.maxLookbackHours)
-    val appended = NmdbCatchup.catchupAppend(intensity, feed, plan)
+    val appended = NmdbCatchup.catchupFromStore(s"${c.input}/intensity",
+      table(s"${c.input}/raw_values"), table(c.feed), now,
+      c.maxLookbackHours, c.site)
     // Point upsert, NOT partition overwrite: the appended frame holds only
     // hours >= each site's resume point, so a whole-partition replace would
     // delete previously stored earlier hours of the same day (the reference
@@ -309,16 +304,15 @@ object PipelineCli {
     val intensity = table("intensity")
     // emulate-old threads through level2 inside a custom chain
     if (c.emulateOldVersion) {
-      val windowStart = lit(now) - expr(s"INTERVAL $days DAYS")
+      val start = IncrementalRunner.windowStart(now, days)
       val padded = raw.filter(
-        col("time") > windowStart - expr(s"INTERVAL ${c.padSeconds} SECOND") &&
+        col("time") > start - expr(s"INTERVAL ${c.padSeconds} SECOND") &&
           col("time") <= lit(now))
       val l1 = LevelPipeline.level1(padded)
       val l2 = LevelPipeline.level2(l1, stations, silo, intensity,
         emulateOldVersion = true)
       val l4 = LevelPipeline.level4(LevelPipeline.level3(l2, stations))
-      IncrementalRunner.upsertByDay(
-        l4.filter(col("time") > windowStart), c.output)
+      IncrementalRunner.upsertByDay(l4.filter(col("time") >= start), c.output)
     } else {
       IncrementalRunner.processLevelsIncremental(
         raw, stations, silo, intensity, c.output, now, days, c.padSeconds)

@@ -35,6 +35,13 @@ object DriverParquet {
 
   /** Overwrite `dir` with a single parquet file holding `rows` (each a
     * Seq aligned with `fields`). Snappy-compressed, like Spark's default.
+    *
+    * The file is written under a hidden temporary name and renamed to
+    * `part-00000.parquet` only after `close()` succeeds. A row of the
+    * wrong width fails with a named cause, and any failure deletes the
+    * temporary file and rethrows, so a failed write leaves `dir` empty
+    * rather than holding a well-formed but truncated file that readers
+    * would accept.
     */
   def overwrite(
       spark: SparkSession,
@@ -52,22 +59,34 @@ object DriverParquet {
         case Field(n, _) => s"required double $n;"
       }.mkString("message sidecar { ", " ", " }"))
     val file = new Path(dirPath, "part-00000.parquet")
+    val tmp = new Path(dirPath, s".part-00000.${java.util.UUID.randomUUID}.tmp")
     val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(file, conf))
+      .builder(HadoopOutputFile.fromPath(tmp, conf))
       .withConf(conf)
       .withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .build()
-    try rows.foreach { r =>
-      val g = new SimpleGroup(schema)
-      // via Number, not asInstanceOf[Int]: Scala widens Seq(int, int,
-      // double) literals to Seq[Double] at call sites, so an int-typed
-      // field may legitimately arrive as a boxed Double of exact value
-      fields.zip(r).foreach {
-        case (Field(n, "int"), v) => g.add(n, v.asInstanceOf[Number].intValue)
-        case (Field(n, _), v) => g.add(n, v.asInstanceOf[Number].doubleValue)
-      }
-      writer.write(g)
-    } finally writer.close()
+    try {
+      try rows.zipWithIndex.foreach { case (r, i) =>
+        require(r.length == fields.length,
+          s"DriverParquet row $i of $dir has ${r.length} values for " +
+            s"${fields.length} fields (${fields.map(_.name).mkString(", ")})")
+        val g = new SimpleGroup(schema)
+        // via Number, not asInstanceOf[Int]: Scala widens Seq(int, int,
+        // double) literals to Seq[Double] at call sites, so an int-typed
+        // field may legitimately arrive as a boxed Double of exact value
+        fields.zip(r).foreach {
+          case (Field(n, "int"), v) => g.add(n, v.asInstanceOf[Number].intValue)
+          case (Field(n, _), v) => g.add(n, v.asInstanceOf[Number].doubleValue)
+        }
+        writer.write(g)
+      } finally writer.close()
+      if (!fs.rename(tmp, file))
+        throw new java.io.IOException(s"DriverParquet could not rename $tmp to $file")
+    } catch {
+      case e: Throwable =>
+        fs.delete(tmp, false)
+        throw e
+    }
   }
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 
 /** Incremental recompute-and-overwrite semantics (SURVEY.md §2.7, S6/S8/S9):
@@ -19,6 +21,7 @@ import org.apache.spark.sql.functions._
 object IncrementalRunner {
 
   /** Columns a day-partitioned level table is bucketed by. */
+  private val SiteCol = "site_no"
   private val DayCol = "day"
 
   /** Idempotent windowed upsert: writes `updated` partitioned by
@@ -35,7 +38,7 @@ object IncrementalRunner {
   def upsertByDay(updated: DataFrame, path: String, tsCol: String = "time"): Unit =
     updated
       .withColumn(DayCol, date_format(col(tsCol), "yyyy-MM-dd"))
-      .repartition(col("site_no"), col(DayCol))
+      .repartition(col(SiteCol), col(DayCol))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       // Dynamic partition overwrite stages task output under
@@ -49,7 +52,7 @@ object IncrementalRunner {
       // (newHadoopConfWithOptions), so a session-level v2 default for
       // plain appends/overwrites is untouched.
       .option("mapreduce.fileoutputcommitter.algorithm.version", "1")
-      .partitionBy("site_no", DayCol)
+      .partitionBy(SiteCol, DayCol)
       .parquet(path)
 
   /** Reads a day-partitioned level table back (partition-pruning friendly:
@@ -69,14 +72,13 @@ object IncrementalRunner {
     * a full recompute of every partition it touches (e.g. the NMDB
     * catch-up, which appends only hours >= each site's resume point).
     *
-    * Scale shape: survivors are read ONLY from the affected partitions —
-    * the semi join is on the store's real partition columns with a
-    * broadcast build side, so dynamic partition pruning keeps the scan at
-    * O(affected days), not O(store). The merged frame is then
-    * `localCheckpoint`ed (it is bounded by the affected window, not the
-    * store) because a parquet path cannot be overwritten by a plan that
-    * still reads from it; a transactional table format (MERGE) subsumes
-    * this on a production lake.
+    * Scale shape: the affected (site, day) pairs are collected from the
+    * materialized append and only those directories are listed and read
+    * ([[readPartitions]]), so the cost is O(affected days), not O(store).
+    * The merged frame is then `localCheckpoint`ed (it is bounded by the
+    * affected window, not the store) because a parquet path cannot be
+    * overwritten by a plan that still reads from it; a transactional
+    * table format (MERGE) subsumes this on a production lake.
     */
   def upsertByKey(
       updated: DataFrame,
@@ -86,39 +88,90 @@ object IncrementalRunner {
     // The key must cover the partition identity (site_no) and the time
     // column the day bucketing derives from — a key that misses either
     // would dedup against the wrong rows or break the partition scan.
-    val keys = if (keyCols.isEmpty) Seq("site_no", tsCol) else keyCols
-    require(keys.contains("site_no") && keys.contains(tsCol),
+    val keys = if (keyCols.isEmpty) Seq(SiteCol, tsCol) else keyCols
+    require(keys.contains(SiteCol) && keys.contains(tsCol),
       s"upsertByKey keyCols must include site_no and tsCol=$tsCol, got $keys")
     val spark = updated.sparkSession
     val merged =
       if (!storeExists(spark, path)) updated
       else {
         // Materialize the append ONCE up front (it is bounded by the
-        // recompute window): the affected-days broadcast, the anti-join
-        // build side, and the union each consume it, and without the
-        // checkpoint each would re-execute the full upstream plan —
-        // plus the final write may not read the path it overwrites.
+        // recompute window): the affected-partition collect, the
+        // anti-join build side, and the union each consume it, and
+        // without the checkpoint each would re-execute the full upstream
+        // plan — plus the final write may not read the path it overwrites.
         val u = updated.localCheckpoint(true)
-        val existing = spark.read.parquet(path)
         val affected = u
-          .select(col("site_no"),
-            date_format(col(tsCol), "yyyy-MM-dd").as(DayCol))
-          .distinct()
-        val survivors = existing
-          .join(broadcast(affected), Seq("site_no", DayCol), "left_semi")
-          .drop(DayCol)
-          .join(u.select(keys.map(col): _*), keys, "left_anti")
-        // second checkpoint: survivors' lineage still scans `path`, and
-        // the write below overwrites it — break that reference too
-        u.unionByName(survivors.select(u.columns.map(col).toIndexedSeq: _*))
-          .localCheckpoint(true)
+          .select(col(SiteCol).cast("string"),
+            date_format(col(tsCol), "yyyy-MM-dd"))
+          .distinct().collect().map(r => (r.getString(0), r.getString(1)))
+          .toSet
+        val slice = readPartitions(spark, path, (s, d) => affected((s, d)))
+        require(slice.sites.isDefined,
+          s"upsertByKey needs a store partitioned by (site_no, day) at $path")
+        slice.rows.fold(u) { stored =>
+          val survivors = stored.join(u.select(keys.map(col): _*), keys,
+            "left_anti")
+          // second checkpoint: survivors' lineage still scans `path`, and
+          // the write below overwrites it — break that reference too
+          u.unionByName(survivors.select(u.columns.map(col).toIndexedSeq: _*))
+            .localCheckpoint(true)
+        }
       }
     upsertByDay(merged, path, tsCol)
   }
 
   private def storeExists(spark: SparkSession, path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
+
+  /** What [[readPartitions]] read of a store: `rows` holds the chosen
+    * partitions (None when none of them exists) and `sites` every site
+    * that has any day partition. A flat store is read whole: its `sites`
+    * is None, because `rows` then holds every stored row.
+    */
+  final case class StoreSlice(rows: Option[DataFrame], sites: Option[Set[String]])
+
+  /** Reads the (site, day) partitions of the store at `path` that `keep`
+    * accepts, given the unescaped site_no and day values. The store is
+    * listed on the driver (`site_no=*`, then `day=*`), so the listing runs
+    * no Spark job, and only the chosen directories are read, with
+    * `basePath` so that site_no stays a column (`day` is dropped, as in
+    * [[readLevel]]). A missing path reads as a store without partitions; a
+    * path with data files but no `site_no=` directories is a flat store
+    * and is read whole.
+    */
+  def readPartitions(
+      spark: SparkSession,
+      path: String,
+      keep: (String, String) => Boolean): StoreSlice = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def children(dir: Path) = fs.listStatus(dir).toSeq
+      .filterNot(s => s.getPath.getName.startsWith("_") ||
+        s.getPath.getName.startsWith("."))
+    def valueOf(s: FileStatus, key: String): Option[String] = {
+      val name = s.getPath.getName
+      if (s.isDirectory && name.startsWith(s"$key="))
+        Some(ExternalCatalogUtils.unescapePathName(name.drop(key.length + 1)))
+      else None
+    }
+    val top = if (fs.exists(root)) children(root) else Nil
+    val siteDirs = top.flatMap(s => valueOf(s, SiteCol).map(_ -> s.getPath))
+    if (siteDirs.isEmpty && top.exists(_.isFile))
+      StoreSlice(Some(spark.read.parquet(path)), None)
+    else {
+      val days = siteDirs.flatMap { case (site, dir) =>
+        children(dir).flatMap(s => valueOf(s, DayCol).map(d => (site, d, s.getPath)))
+      }
+      val chosen = days.collect { case (s, d, p) if keep(s, d) => p.toString }
+      val rows =
+        if (chosen.isEmpty) None
+        else Some(spark.read.option("basePath", path).parquet(chosen: _*)
+          .drop(DayCol))
+      StoreSlice(rows, Some(days.map(_._1).toSet))
+    }
   }
 
   /** The reference CLI's backprocess window (`-d` days before `now`,
@@ -132,13 +185,22 @@ object IncrementalRunner {
       backprocessDays: Int): DataFrame =
     df.filter(col(tsCol) > lit(now) - expr(s"INTERVAL $backprocessDays DAYS"))
 
+  /** Start of a levels run's recompute window: midnight, in the session
+    * time zone, of the day `backprocessDays` before `now`. The write
+    * replaces whole (site, day) partitions, so the window covers its
+    * first day whole; starting it at `now - days` itself would drop that
+    * day's morning whenever `now` is not midnight.
+    */
+  def windowStart(now: java.sql.Timestamp, backprocessDays: Int): Column =
+    date_trunc("day", lit(now) - expr(s"INTERVAL $backprocessDays DAYS"))
+
   /** Windowed incremental run of the full level pipeline with HISTORY
     * PADDING: windowed operators (lag, 29-min dedup, ±3h smoothing, as-of)
     * read `padSeconds` of history before the recompute window so the
     * window's first rows see their true predecessors — the reference
     * instead truncates at the window edge (SURVEY §2.7 risk 4); pass
     * padSeconds = 0 for bug-compatible truncation. Only rows INSIDE the
-    * window are written back.
+    * window ([[windowStart]] to `now`) are written back.
     */
   def processLevelsIncremental(
       raw: DataFrame,
@@ -165,12 +227,12 @@ object IncrementalRunner {
       now: java.sql.Timestamp,
       backprocessDays: Int,
       padSeconds: Long): Unit = {
-    val windowStart = lit(now) - expr(s"INTERVAL $backprocessDays DAYS")
+    val start = windowStart(now, backprocessDays)
     val padded = raw.filter(
-      col("time") > windowStart - expr(s"INTERVAL $padSeconds SECOND") &&
+      col("time") > start - expr(s"INTERVAL $padSeconds SECOND") &&
         col("time") <= lit(now))
     val level4 = LevelPipeline.processLevels(padded, stations, silo, intensity)
-    sink.upsert(level4.filter(col("time") > windowStart))
+    sink.upsert(level4.filter(col("time") >= start))
   }
 
   /** Snapshot diff — which keys were added, removed, or changed between

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import java.time.ZoneId
+import java.time.temporal.ChronoUnit
 
 /** NMDB incremental catch-up: resume each site's intensity series from its
   * last stored hour, walk forward hour-by-hour to `now`, stop at the first
@@ -28,6 +32,10 @@ object NmdbCatchup {
 
   /** MAXIMUM_LOOKBACK_TIME_DIFF (`nmdb/config.py:11-12`): 24 hours. */
   val DefaultMaxLookbackHours: Int = 24
+
+  /** The validation's reach: a previous valid point more than this
+    * before a point is ignored (`nmdb/entrypoint.py:122-134`). */
+  val DefaultMaxGapSeconds: Long = 24 * 3600
 
   private val HourMs = 3600L * 1000L
 
@@ -120,7 +128,7 @@ object NmdbCatchup {
       feed: DataFrame,
       plan: DataFrame,
       tolerance: Double = 0.2,
-      maxGapSeconds: Long = 24 * 3600): DataFrame = {
+      maxGapSeconds: Long = DefaultMaxGapSeconds): DataFrame = {
     val w = Window.partitionBy(col("site_no")).orderBy(col("fetch_hour"))
     val contiguous = plan
       .join(
@@ -148,4 +156,68 @@ object NmdbCatchup {
       .filter(col("time") >= col("start_hour"))
       .drop("start_hour")
   }
+
+  /** Oldest stored time a catch-up at `now` can use:
+    * `nowHour - maxLookbackHours - DefaultMaxGapSeconds`. The walk never
+    * starts before `nowHour - maxLookbackHours` (the clamp), and the
+    * validation ([[catchupAppend]] at its default gap) ignores a previous
+    * valid point more than the gap before the first walked hour, so no
+    * older row changes a resume hour, a seed or a flag. `nowHour` is `now`
+    * truncated to the hour in `zone`, as `date_trunc` does in the session
+    * time zone.
+    */
+  private def readBound(
+      now: java.sql.Timestamp,
+      zone: ZoneId,
+      maxLookbackHours: Int): java.sql.Timestamp = {
+    val nowHour = now.toInstant.atZone(zone).truncatedTo(ChronoUnit.HOURS)
+    java.sql.Timestamp.from(nowHour.toInstant
+      .minusSeconds(maxLookbackHours * 3600L + DefaultMaxGapSeconds))
+  }
+
+  /** [[fetchPlan]] plus [[catchupAppend]] over the intensity store at
+    * `storePath`, reading only the stored days from [[readBound]] on.
+    *
+    * A (site_no, day)-partitioned store is listed on the driver and read
+    * from the day before the bound's day (the extra day covers a store
+    * written in another time zone), then filtered exactly to
+    * `time >= bound`. A site with stored rows but none that recent resumes
+    * from the bound, which the clamp moves to `nowHour - lookback` as the
+    * site's true last stored hour would; only a site with no stored row at
+    * all falls back to its first raw hour. A flat store is read whole.
+    *
+    * `raw` and `feed` are pre-filtered by the caller; `site`, when given,
+    * restricts the stored rows the same way.
+    */
+  def catchupFromStore(
+      storePath: String,
+      raw: DataFrame,
+      feed: DataFrame,
+      now: java.sql.Timestamp,
+      maxLookbackHours: Int = DefaultMaxLookbackHours,
+      site: Option[Int] = None): DataFrame = {
+    val spark = raw.sparkSession
+    import spark.implicits._
+    val zone = ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    val bound = readBound(now, zone, maxLookbackHours)
+    val firstDay = bound.toInstant.atZone(zone).toLocalDate.minusDays(1).toString
+    val slice = IncrementalRunner.readPartitions(spark, storePath,
+      (_, day) => day >= firstDay)
+    val rows = slice.rows.getOrElse(spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), StoredSchema))
+    val (stored, floors) = slice.sites match {
+      case Some(sites) => (rows.filter(col("time") >= lit(bound)),
+        sites.toSeq.map(s => (s.toInt, bound)))
+      case None => (rows, Nil) // flat: every stored row is here
+    }
+    def ofSite(df: DataFrame) = site.fold(df)(s => df.filter(col("site_no") === s))
+    val resumeFrom = stored.select(col("site_no"), col("time"))
+      .unionByName(floors.toDF("site_no", "time"))
+    val plan = fetchPlan(ofSite(resumeFrom), raw,
+      date_trunc("hour", lit(now)), maxLookbackHours)
+    catchupAppend(ofSite(stored), feed, plan)
+  }
+
+  private val StoredSchema = StructType.fromDDL(
+    "site_no INT, time TIMESTAMP, intensity DOUBLE, bad_data_flag INT")
 }

@@ -141,6 +141,28 @@ class IncrementalRunnerSpec extends SparkSpec {
     assert(IncrementalRunner.readLevel(spark, path).count() === 1)
   }
 
+  test("upsertByKey never reads an untouched partition") {
+    val path = tmpDir()
+    IncrementalRunner.upsertByDay(Seq(
+      (1, T("2024-01-01 10:00:00"), 1.0),
+      (2, T("2024-01-01 10:00:00"), 2.0))
+      .toDF("site_no", "time", "v"), path)
+    // an unreadable file in the untouched (site 2, Jan 1) partition: any
+    // read of that partition fails on it
+    val junk = java.nio.file.Paths.get(path, "site_no=2", "day=2024-01-01",
+      "part-99999-junk.snappy.parquet")
+    java.nio.file.Files.write(junk, "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception](spark.read.parquet(path).count())
+    IncrementalRunner.upsertByKey(
+      Seq((1, T("2024-01-01 11:00:00"), 3.0)).toDF("site_no", "time", "v"),
+      path)
+    val site1 = spark.read.parquet(s"$path/site_no=1")
+      .select("time", "v").as[(java.sql.Timestamp, Double)].collect().toSet
+    assert(site1 === Set(
+      (T("2024-01-01 10:00:00"), 1.0), (T("2024-01-01 11:00:00"), 3.0)))
+    assert(java.nio.file.Files.exists(junk))
+  }
+
   test("backprocessFilter keeps rows strictly inside the look-back window") {
     val df = Seq(
       (1, T("2024-01-01 00:00:00")),
@@ -153,12 +175,14 @@ class IncrementalRunnerSpec extends SparkSpec {
     assert(out === Set(T("2024-01-10 00:00:01"), T("2024-01-15 00:00:00")))
   }
 
-  test("processLevelsIncremental writes only the window, pads history") {
-    val path = tmpDir()
-    // hourly raw over 2 days for one site, all fields constant-ish
-    val raw = (0 until 48).map { h =>
+  /** Level-chain inputs for one site: `hours` hourly raw rows from Jan 1
+    * 00:00, ON the hour, all fields constant-ish (count varies with
+    * `countCycle` > 1), plus stations, silo and intensity.
+    */
+  private def levelInputs(hours: Int, countCycle: Int = 1) = {
+    val raw = (0 until hours).map { h =>
       (1, T(f"2024-01-0${1 + h / 24}%d ${h % 24}%02d:00:00"),
-        100L, 12.0, 1000.0, 1005.0, 20.0, 50.0, 0.0,
+        100L + h % countCycle, 12.0, 1000.0, 1005.0, 20.0, 50.0, 0.0,
         20.0, 30.0, 21.0, 31.0, 0.1, 0.2, 0.3, 0)
     }.toDF("site_no", "time", "count", "battery", "pressure1", "pressure2",
       "external_temperature", "external_humidity", "rain",
@@ -168,9 +192,15 @@ class IncrementalRunnerSpec extends SparkSpec {
       1, 0.01, 1000.0, 100.0, 1.0, 1.0, 100.0, 1.0, 0.05, 0.05)).toDF()
     val silo = Seq((1, T("2024-01-01 08:00:00"), 10.0, 60.0))
       .toDF("site_no", "time", "average_temperature", "average_humidity")
-    val intensity = (0 until 48).map(h =>
+    val intensity = (0 until hours).map(h =>
       (1, T(f"2024-01-0${1 + h / 24}%d ${h % 24}%02d:00:00"), 130.0))
       .toDF("site_no", "time", "intensity")
+    (raw, stations, silo, intensity)
+  }
+
+  test("processLevelsIncremental writes only the window, pads history") {
+    val path = tmpDir()
+    val (raw, stations, silo, intensity) = levelInputs(48)
 
     IncrementalRunner.processLevelsIncremental(
       raw, stations, silo, intensity, path,
@@ -297,4 +327,28 @@ class IncrementalRunnerSpec extends SparkSpec {
         snap.withColumn("op", lit("x")), changes, Seq("k"))
     }
   }
+
+  test("a noon levels run over a backfilled store keeps its first day whole") {
+    val (raw, stations, silo, intensity) = levelInputs(72, countCycle = 5)
+    def day2(path: String) = {
+      val df = IncrementalRunner.readLevel(spark, path)
+        .filter(col("time") >= T("2024-01-02 00:00:00") &&
+          col("time") < T("2024-01-03 00:00:00"))
+      df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().toSet
+    }
+    val backfill = tmpDir()
+    IncrementalRunner.processLevelsIncremental(raw, stations, silo, intensity,
+      backfill, now = T("2024-01-04 00:00:00"), backprocessDays = 3)
+    val store = tmpDir()
+    IncrementalRunner.processLevelsIncremental(raw, stations, silo, intensity,
+      store, now = T("2024-01-04 00:00:00"), backprocessDays = 3)
+    // the noon run's window starts on Jan 2; its partition is replaced
+    // whole, so it must be recomputed whole, midnight row included
+    IncrementalRunner.processLevelsIncremental(raw, stations, silo, intensity,
+      store, now = T("2024-01-03 12:00:00"), backprocessDays = 1)
+    val want = day2(backfill)
+    assert(want.size === 24)
+    assert(day2(store) === want)
+  }
 }
+

@@ -106,4 +106,71 @@ class NmdbCatchupSpec extends SparkSpec {
     assert(bySite(3).head._1 === base + 41 * H)
     assert(bySite(3).size === 20)
   }
+
+  test("catchupFromStore equals the whole-store fetchPlan + catchupAppend " +
+    "over random day-partitioned stores") {
+    import spark.implicits._
+    def ts(h: Int, minute: Int = 0) = new java.sql.Timestamp(base + h * H + minute * 60000L)
+    val gapH = (NmdbCatchup.DefaultMaxGapSeconds / 3600).toInt
+    for ((lookback, trial) <- Seq(24, 6, 48).zipWithIndex) {
+      val rnd = new scala.util.Random(7 + trial)
+      val nowH = 24 * (62 + rnd.nextInt(10)) + rnd.nextInt(24)
+      val now = ts(nowH, rnd.nextInt(60))
+      val start = nowH - lookback // the clamped walk start
+      def v() = 100.0 + rnd.nextInt(40)
+      // sites 1-4: months of hourly history with feed-outage holes, ending
+      // anywhere from 1 hour to 60 days before now; 1 in 10 rows flagged
+      val histories = (1 to 4).flatMap { s =>
+        val end = nowH - 1 - rnd.nextInt(if (s % 2 == 0) 72 else 60 * 24)
+        (rnd.nextInt(48) to end).filter(_ => rnd.nextDouble() > 0.2)
+          .map(h => (s, ts(h), v(), if (rnd.nextDouble() < 0.1) 1 else 0))
+      }
+      val special: Seq[(Int, java.sql.Timestamp, Double, Int)] =
+        // 5: only rows far older than the lookback, plus a recent first
+        //    raw row: it must clamp, not fall back to that raw hour
+        (0 until 48).map(h => (5, ts(h), v(), 0)) ++
+          // (6 has no stored row: it falls back to its first raw hour)
+          // 7: a stored row in the future: the site is skipped
+          Seq((7, ts(nowH - 30), v(), 0), (7, ts(nowH + 3), v(), 0)) ++
+          // 8: its seed sits exactly maxGap before the walk start (it
+          //    flags the 1.5x first hour); 9: one hour further (ignored)
+          Seq((8, ts(10), v(), 0), (8, ts(start - gapH), 100.0, 0),
+            (9, ts(10), v(), 0), (9, ts(start - gapH - 1), 100.0, 0))
+      val path = tempDir("graft_nmdb_bound_") + "/intensity"
+      graft.operators.IncrementalRunner.upsertByDay(
+        (histories ++ special).toDF("site_no", "time", "intensity", "bad_data_flag"),
+        path)
+      val firstRaw = Map(5 -> ts(nowH - 2, 13), 6 -> ts(nowH - 5, 17))
+      val raw = (1 to 9).map(s => (s, firstRaw.getOrElse(s, ts(0, 5))))
+        .toDF("site_no", "time")
+      // the first walked hour of each planted site is never a feed gap
+      val walkStart = Map(5 -> start, 6 -> (nowH - 5), 8 -> start, 9 -> start)
+      val feed = (for {
+        s <- 1 to 9
+        h <- nowH - lookback - 30 to nowH + 5
+        if walkStart.get(s).contains(h) || rnd.nextDouble() > 0.04
+      } yield (s, ts(h),
+        if (s >= 8 && h == start) 150.0
+        else if (rnd.nextDouble() < 0.08) 2 * v() else v()))
+        .toDF("site_no", "time", "intensity")
+
+      def rows(df: org.apache.spark.sql.DataFrame) = df
+        .select(col("site_no").cast("int"), col("time"), col("intensity"),
+          col("bad_data_flag"))
+        .as[(Int, java.sql.Timestamp, Double, Int)].collect().toSet
+      val whole = spark.read.parquet(path)
+      val want = rows(NmdbCatchup.catchupAppend(whole, feed,
+        NmdbCatchup.fetchPlan(whole, raw, date_trunc("hour", lit(now)), lookback)))
+      val got = rows(NmdbCatchup.catchupFromStore(path, raw, feed, now, lookback))
+      assert(got === want, s"lookback $lookback, now $now")
+      // the planted cases took the path they were planted for
+      def firstOf(s: Int) = want.filter(_._1 == s).minByOption(_._2.getTime)
+      assert(firstOf(5).map(_._2) === Some(ts(start)))
+      assert(firstOf(6).map(_._2) === Some(ts(nowH - 5)))
+      assert(firstOf(7).isEmpty)
+      assert(firstOf(8).map(r => (r._2, r._4)) === Some((ts(start), 1)))
+      assert(firstOf(9).map(r => (r._2, r._4)) === Some((ts(start), 0)))
+    }
+  }
 }
+

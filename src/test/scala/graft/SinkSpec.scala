@@ -82,7 +82,10 @@ class SinkSpec extends SparkSpec {
     // same window as the parquet path: only day-2 rows, all delivered
     assert(rows.nonEmpty)
     assert(rows.forall(
-      !_.getAs[java.sql.Timestamp]("time").before(T("2024-01-02 00:00:01"))))
+      !_.getAs[java.sql.Timestamp]("time").before(T("2024-01-02 00:00:00"))))
+    // the window covers its first day whole: day 2's midnight row included
+    assert(rows.exists(_.getAs[java.sql.Timestamp]("time") ==
+      T("2024-01-02 00:00:00")))
     var maxBatch = 0
     CollectorSink.batches.forEach(b => maxBatch = math.max(maxBatch, b.size))
     assert(maxBatch <= 7)
