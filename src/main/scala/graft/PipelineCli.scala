@@ -287,6 +287,13 @@ object PipelineCli {
       s"(now=$now, lookback=${c.maxLookbackHours}h) to ${c.output}")
   }
 
+  /** A levels run over the window [[IncrementalRunner.windowStart]] to
+    * `now`, padded by `--pad-seconds`. It reads only the SILO days and the
+    * intensity rows that window can use ([[IncrementalRunner.siloDays]],
+    * [[IncrementalRunner.readLevelsIntensity]]). `--emulate-old-version`
+    * reads both whole: its backward as-of picks each site's FIRST
+    * intensity over all earlier history.
+    */
   def runLevels(spark: SparkSession, c: Config): Unit = {
     val now = c.now.getOrElse(
       new java.sql.Timestamp(System.currentTimeMillis()))
@@ -300,20 +307,20 @@ object PipelineCli {
     }
     val raw = table("raw_values")
     val stations = spark.read.parquet(s"${c.input}/stations")
-    val silo = table("silo_data")
-    val intensity = table("intensity")
-    // emulate-old threads through level2 inside a custom chain
+    val start = IncrementalRunner.windowStart(now, days,
+      IncrementalRunner.sessionZone(spark))
+    val padStart = IncrementalRunner.padStart(start, c.padSeconds)
     if (c.emulateOldVersion) {
-      val start = IncrementalRunner.windowStart(now, days)
-      val padded = raw.filter(
-        col("time") > start - expr(s"INTERVAL ${c.padSeconds} SECOND") &&
-          col("time") <= lit(now))
+      val padded = raw.filter(col("time") > lit(padStart) && col("time") <= lit(now))
       val l1 = LevelPipeline.level1(padded)
-      val l2 = LevelPipeline.level2(l1, stations, silo, intensity,
-        emulateOldVersion = true)
+      val l2 = LevelPipeline.level2(l1, stations, table("silo_data"),
+        table("intensity"), emulateOldVersion = true)
       val l4 = LevelPipeline.level4(LevelPipeline.level3(l2, stations))
-      IncrementalRunner.upsertByDay(l4.filter(col("time") >= start), c.output)
+      IncrementalRunner.upsertByDay(l4.filter(col("time") >= lit(start)), c.output)
     } else {
+      val silo = IncrementalRunner.siloDays(table("silo_data"), padStart, now)
+      val intensity = IncrementalRunner.readLevelsIntensity(spark,
+        s"${c.input}/intensity", padStart, c.site)
       IncrementalRunner.processLevelsIncremental(
         raw, stations, silo, intensity, c.output, now, days, c.padSeconds)
     }

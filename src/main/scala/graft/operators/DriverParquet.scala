@@ -36,12 +36,12 @@ object DriverParquet {
   /** Overwrite `dir` with a single parquet file holding `rows` (each a
     * Seq aligned with `fields`). Snappy-compressed, like Spark's default.
     *
-    * The file is written under a hidden temporary name and renamed to
-    * `part-00000.parquet` only after `close()` succeeds. A row of the
+    * The file is written under a hidden temporary name next to the old
+    * generation. Only after `close()` succeeds are the old files removed
+    * and the temporary file renamed to `part-00000.parquet`. A row of the
     * wrong width fails with a named cause, and any failure deletes the
-    * temporary file and rethrows, so a failed write leaves `dir` empty
-    * rather than holding a well-formed but truncated file that readers
-    * would accept.
+    * temporary file and rethrows, so a failed write leaves the previous
+    * generation readable, never a well-formed but truncated file.
     */
   def overwrite(
       spark: SparkSession,
@@ -51,7 +51,6 @@ object DriverParquet {
     val conf = spark.sessionState.newHadoopConf()
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf)
-    fs.delete(dirPath, true)
     fs.mkdirs(dirPath)
     val schema = MessageTypeParser.parseMessageType(
       fields.map {
@@ -81,6 +80,9 @@ object DriverParquet {
         }
         writer.write(g)
       } finally writer.close()
+      fs.listStatus(dirPath).map(_.getPath)
+        .filterNot(_.getName == tmp.getName)
+        .foreach(fs.delete(_, true))
       if (!fs.rename(tmp, file))
         throw new java.io.IOException(s"DriverParquet could not rename $tmp to $file")
     } catch {

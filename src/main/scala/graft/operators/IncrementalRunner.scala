@@ -1,9 +1,17 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ColumnPath
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import java.time.ZoneId
+import scala.jdk.CollectionConverters._
 
 /** Incremental recompute-and-overwrite semantics (SURVEY.md §2.7, S6/S8/S9):
   * the reference re-derives a sliding look-back window twice a day and
@@ -106,7 +114,8 @@ object IncrementalRunner {
             date_format(col(tsCol), "yyyy-MM-dd"))
           .distinct().collect().map(r => (r.getString(0), r.getString(1)))
           .toSet
-        val slice = readPartitions(spark, path, (s, d) => affected((s, d)))
+        val slice = readPartitions(spark, path, (s, d) => affected((s, d)),
+          u.schema)
         require(slice.sites.isDefined,
           s"upsertByKey needs a store partitioned by (site_no, day) at $path")
         slice.rows.fold(u) { stored =>
@@ -133,21 +142,40 @@ object IncrementalRunner {
     */
   final case class StoreSlice(rows: Option[DataFrame], sites: Option[Set[String]])
 
+  /** A seek for [[readPartitions]]: per site, also read the newest day
+    * partition before `before` whose `column` holds a non-null value.
+    */
+  final case class LastNonNull(before: String, column: String)
+
   /** Reads the (site, day) partitions of the store at `path` that `keep`
     * accepts, given the unescaped site_no and day values. The store is
-    * listed on the driver (`site_no=*`, then `day=*`), so the listing runs
-    * no Spark job, and only the chosen directories are read, with
-    * `basePath` so that site_no stays a column (`day` is dropped, as in
-    * [[readLevel]]). A missing path reads as a store without partitions; a
-    * path with data files but no `site_no=` directories is a flat store
-    * and is read whole.
+    * listed on the driver (`site_no=*`, then `day=*`, then the data files
+    * of each chosen day), so the listing runs no Spark job, and only the
+    * chosen days' files are read, with `basePath` so that site_no stays a
+    * column (`day` is dropped, as in [[readLevel]]). A missing path reads
+    * as a store without partitions; a path with data files but no
+    * `site_no=` directories is a flat store and is read whole.
+    *
+    * The chosen files are read with `schema` (the data columns, site_no
+    * included), so no schema-inference job runs. They go to Spark in scans
+    * of at most `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * paths, so Spark checks them on the driver instead of in a listing job.
+    *
+    * With `lastNonNull`, every site whose `before` day `keep` accepts also
+    * gets its newest day before `before` that holds a non-null `column`.
+    * The days are tried newest first, each decided on the driver from the
+    * parquet footers' null counts; a day whose footers lack a null count
+    * is read to decide. Days older than the one found are never opened.
     */
   def readPartitions(
       spark: SparkSession,
       path: String,
-      keep: (String, String) => Boolean): StoreSlice = {
+      keep: (String, String) => Boolean,
+      schema: StructType,
+      lastNonNull: Option[LastNonNull] = None): StoreSlice = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = root.getFileSystem(conf)
     def children(dir: Path) = fs.listStatus(dir).toSeq
       .filterNot(s => s.getPath.getName.startsWith("_") ||
         s.getPath.getName.startsWith("."))
@@ -157,42 +185,139 @@ object IncrementalRunner {
         Some(ExternalCatalogUtils.unescapePathName(name.drop(key.length + 1)))
       else None
     }
+    def read(files: Seq[FileStatus]): DataFrame = files
+      .grouped(math.max(1, spark.sessionState.conf.parallelPartitionDiscoveryThreshold))
+      .map { group =>
+        spark.read.schema(schema).option("basePath", path)
+          .parquet(group.map(_.getPath.toString): _*)
+      }
+      .reduce(_ unionByName _)
+      .drop(DayCol)
     val top = if (fs.exists(root)) children(root) else Nil
     val siteDirs = top.flatMap(s => valueOf(s, SiteCol).map(_ -> s.getPath))
     if (siteDirs.isEmpty && top.exists(_.isFile))
       StoreSlice(Some(spark.read.parquet(path)), None)
     else {
-      val days = siteDirs.flatMap { case (site, dir) =>
-        children(dir).flatMap(s => valueOf(s, DayCol).map(d => (site, d, s.getPath)))
+      val days = siteDirs.map { case (site, dir) =>
+        site -> children(dir).flatMap(s => valueOf(s, DayCol).map(_ -> s.getPath))
       }
-      val chosen = days.collect { case (s, d, p) if keep(s, d) => p.toString }
-      val rows =
-        if (chosen.isEmpty) None
-        else Some(spark.read.option("basePath", path).parquet(chosen: _*)
-          .drop(DayCol))
-      StoreSlice(rows, Some(days.map(_._1).toSet))
+      def filesOf(day: Path) = children(day).filter(_.isFile)
+      def holdsNonNull(files: Seq[FileStatus], column: String): Boolean = {
+        val byFooter = files.map(f => footerHoldsNonNull(f, column, conf))
+        byFooter.contains(Some(true)) || {
+          val uncounted = files.zip(byFooter).collect { case (f, None) => f }
+          uncounted.nonEmpty && !read(uncounted).where(col(column).isNotNull).isEmpty
+        }
+      }
+      val sought = for {
+        seek <- lastNonNull.toSeq
+        (site, siteDays) <- days if keep(site, seek.before)
+        found <- siteDays.filter(_._1 < seek.before).sortBy(_._1).reverseIterator
+          .map(d => filesOf(d._2)).find(holdsNonNull(_, seek.column))
+      } yield found
+      val kept = for {
+        (site, siteDays) <- days
+        (day, dir) <- siteDays if keep(site, day)
+      } yield filesOf(dir)
+      val files = (kept ++ sought).flatten.distinctBy(_.getPath)
+      StoreSlice(if (files.isEmpty) None else Some(read(files)),
+        Some(days.collect { case (site, ds) if ds.nonEmpty => site }.toSet))
     }
   }
 
-  /** The reference CLI's backprocess window (`-d` days before `now`,
-    * `pipeline/cosmoz_process_levels.py:697-716`): rows with
-    * ts > now - backprocess.
+  /** Some(true) when a row group of the parquet file holds a non-null
+    * top-level `column` and Some(false) when none does, by the footer's
+    * null counts (a file without the column holds only nulls); None when
+    * a row group with rows lacks the column's null count.
     */
-  def backprocessFilter(
-      df: DataFrame,
-      tsCol: String,
-      now: java.sql.Timestamp,
-      backprocessDays: Int): DataFrame =
-    df.filter(col(tsCol) > lit(now) - expr(s"INTERVAL $backprocessDays DAYS"))
+  private def footerHoldsNonNull(
+      file: FileStatus,
+      column: String,
+      conf: Configuration): Option[Boolean] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val verdicts = try {
+      val colPath = ColumnPath.get(column)
+      reader.getFooter.getBlocks.asScala.toSeq.filter(_.getRowCount > 0).map { block =>
+        block.getColumns.asScala.find(_.getPath == colPath) match {
+          case None => Some(false)
+          case Some(chunk) =>
+            val stats = chunk.getStatistics
+            if (stats == null || !stats.isNumNullsSet) None
+            else Some(stats.getNumNulls < block.getRowCount)
+        }
+      }
+    } finally reader.close()
+    if (verdicts.contains(Some(true))) Some(true)
+    else if (verdicts.contains(None)) None
+    else Some(false)
+  }
 
-  /** Start of a levels run's recompute window: midnight, in the session
-    * time zone, of the day `backprocessDays` before `now`. The write
-    * replaces whole (site, day) partitions, so the window covers its
+  /** The intensity columns level2 reads, with their stored types. */
+  private val IntensitySchema =
+    StructType.fromDDL("site_no INT, time TIMESTAMP, intensity DOUBLE")
+
+  /** The stored intensity rows that can change a levels run whose padded
+    * window is (`padStart`, `now`], read from the store at `path`.
+    *
+    * Level2 joins intensity by hour and falls back to an as-of lookup:
+    * the last non-null intensity at or before a row, else the first at or
+    * after it. From a (site_no, day)-partitioned store this reads every
+    * day from the day before `padStart`'s day on, future days included
+    * (the extra day covers a store written in another time zone). That
+    * covers the hour join and the forward fallback. For the backward
+    * fallback it adds each site's newest older day holding a non-null
+    * intensity ([[LastNonNull]]), since `last(_, ignoreNulls)` reaches
+    * back across any gap. A flat store is read whole.
+    */
+  def readLevelsIntensity(
+      spark: SparkSession,
+      path: String,
+      padStart: java.sql.Timestamp,
+      site: Option[Int]): DataFrame = {
+    require(storeExists(spark, path), s"no intensity store at $path")
+    val firstDay = padStart.toInstant.atZone(sessionZone(spark)).toLocalDate.minusDays(1)
+      .toString
+    def siteOk(s: String) = site.forall(n => s.toIntOption.contains(n))
+    val slice = readPartitions(spark, path,
+      (s, day) => siteOk(s) && day >= firstDay, IntensitySchema,
+      Some(LastNonNull(firstDay, "intensity")))
+    val rows = slice.rows.getOrElse(spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), IntensitySchema))
+    site.fold(rows)(s => rows.filter(col("site_no") === s))
+  }
+
+  /** The SILO rows a levels run whose padded window is (`padStart`,
+    * `now`] joins: level2 matches them by `to_date(time)` in the session
+    * time zone, so only the days from `padStart`'s to `now`'s count.
+    */
+  def siloDays(silo: DataFrame, padStart: java.sql.Timestamp,
+      now: java.sql.Timestamp): DataFrame = {
+    val zone = sessionZone(silo.sparkSession)
+    def dayStart(d: java.time.LocalDate) =
+      java.sql.Timestamp.from(d.atStartOfDay(zone).toInstant)
+    silo.filter(
+      col("time") >= lit(dayStart(padStart.toInstant.atZone(zone).toLocalDate)) &&
+        col("time") < lit(dayStart(now.toInstant.atZone(zone).toLocalDate.plusDays(1))))
+  }
+
+  /** The session time zone, in which day partitions and windows are cut. */
+  private[graft] def sessionZone(spark: SparkSession): ZoneId =
+    ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+
+  /** Start of a levels run's recompute window: midnight, in `zone` (the
+    * session time zone), of the day `backprocessDays` before `now`. The
+    * write replaces whole (site, day) partitions, so the window covers its
     * first day whole; starting it at `now - days` itself would drop that
     * day's morning whenever `now` is not midnight.
     */
-  def windowStart(now: java.sql.Timestamp, backprocessDays: Int): Column =
-    date_trunc("day", lit(now) - expr(s"INTERVAL $backprocessDays DAYS"))
+  def windowStart(now: java.sql.Timestamp, backprocessDays: Int,
+      zone: ZoneId): java.sql.Timestamp =
+    java.sql.Timestamp.from(now.toInstant.minusSeconds(backprocessDays * 86400L)
+      .atZone(zone).toLocalDate.atStartOfDay(zone).toInstant)
+
+  /** Start of a padded window: `padSeconds` before its [[windowStart]]. */
+  def padStart(start: java.sql.Timestamp, padSeconds: Long): java.sql.Timestamp =
+    new java.sql.Timestamp(start.getTime - padSeconds * 1000L)
 
   /** Windowed incremental run of the full level pipeline with HISTORY
     * PADDING: windowed operators (lag, 29-min dedup, ±3h smoothing, as-of)
@@ -227,12 +352,11 @@ object IncrementalRunner {
       now: java.sql.Timestamp,
       backprocessDays: Int,
       padSeconds: Long): Unit = {
-    val start = windowStart(now, backprocessDays)
+    val start = windowStart(now, backprocessDays, sessionZone(raw.sparkSession))
     val padded = raw.filter(
-      col("time") > start - expr(s"INTERVAL $padSeconds SECOND") &&
-        col("time") <= lit(now))
+      col("time") > lit(padStart(start, padSeconds)) && col("time") <= lit(now))
     val level4 = LevelPipeline.processLevels(padded, stations, silo, intensity)
-    sink.upsert(level4.filter(col("time") >= start))
+    sink.upsert(level4.filter(col("time") >= lit(start)))
   }
 
   /** Snapshot diff — which keys were added, removed, or changed between

@@ -198,11 +198,11 @@ object NmdbCatchup {
       site: Option[Int] = None): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
-    val zone = ZoneId.of(spark.sessionState.conf.sessionLocalTimeZone)
+    val zone = IncrementalRunner.sessionZone(spark)
     val bound = readBound(now, zone, maxLookbackHours)
     val firstDay = bound.toInstant.atZone(zone).toLocalDate.minusDays(1).toString
     val slice = IncrementalRunner.readPartitions(spark, storePath,
-      (_, day) => day >= firstDay)
+      (_, day) => day >= firstDay, StoredSchema)
     val rows = slice.rows.getOrElse(spark.createDataFrame(
       java.util.Collections.emptyList[Row](), StoredSchema))
     val (stored, floors) = slice.sites match {

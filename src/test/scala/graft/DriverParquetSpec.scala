@@ -45,8 +45,12 @@ class DriverParquetSpec extends SparkSpec {
       DriverParquet.overwrite(spark, dir, fields, rows)
     }
     assert(e.getMessage === "source failed")
-    // neither the old generation nor a five-row prefix of the new one
-    assert(files(dir).isEmpty)
-    assert(new java.io.File(dir).list().isEmpty, "temporary file left behind")
+    // the old one-row generation, not a five-row prefix of the new one
+    assert(files(dir) === Seq("part-00000.parquet"))
+    assert(new java.io.File(dir).list().forall(n => !n.contains(".tmp")),
+      "temporary file left behind")
+    val got = spark.read.parquet(dir).collect()
+      .map(r => (r.getInt(0), r.getDouble(1))).toSeq
+    assert(got === Seq((0, 0.0)))
   }
 }

@@ -3,6 +3,8 @@ package graft
 import graft.operators.IncrementalRunner
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 class IncrementalRunnerSpec extends SparkSpec {
   import spark.implicits._
 
@@ -163,16 +165,42 @@ class IncrementalRunnerSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(junk))
   }
 
-  test("backprocessFilter keeps rows strictly inside the look-back window") {
-    val df = Seq(
-      (1, T("2024-01-01 00:00:00")),
-      (1, T("2024-01-10 00:00:01")),
-      (1, T("2024-01-15 00:00:00")))
-      .toDF("site_no", "time")
-    val out = IncrementalRunner
-      .backprocessFilter(df, "time", T("2024-01-20 00:00:00"), 10)
-      .select("time").as[java.sql.Timestamp].collect().toSet
-    assert(out === Set(T("2024-01-10 00:00:01"), T("2024-01-15 00:00:00")))
+  test("readPartitions' seek reads a day whose footers lack null counts") {
+    val path = tmpDir()
+    def day(site: Int, d: String, stats: Boolean, vs: Option[Double]*): Unit =
+      vs.zipWithIndex.map { case (v, i) => (T(s"$d 0$i:00:00"), v) }
+        .toDF("time", "intensity").coalesce(1).write
+        .option("parquet.column.statistics.enabled", stats.toString)
+        .parquet(s"$path/site_no=$site/day=$d")
+    // site 1: a null-only day without null counts above a counted day
+    day(1, "2024-01-01", stats = true, Some(1.0), None)
+    day(1, "2024-01-02", stats = false, None, None)
+    // site 2: a non-null day without null counts above a counted day
+    day(2, "2024-01-01", stats = true, Some(2.0))
+    day(2, "2024-01-03", stats = false, None, Some(3.0))
+    day(2, "2024-01-05", stats = true, Some(5.0))
+    // the uncounted footers really lack a null count
+    val uncounted = new java.io.File(s"$path/site_no=1/day=2024-01-02")
+      .listFiles().filter(_.getName.endsWith(".parquet")).head
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(uncounted.getPath),
+        spark.sessionState.newHadoopConf()))
+    try assert(footer.getFooter.getBlocks.get(0).getColumns.asScala
+      .forall(c => c.getStatistics == null || !c.getStatistics.isNumNullsSet))
+    finally footer.close()
+    val slice = IncrementalRunner.readPartitions(spark, path,
+      (_, d) => d >= "2024-01-04",
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "site_no INT, time TIMESTAMP, intensity DOUBLE"),
+      Some(IncrementalRunner.LastNonNull("2024-01-04", "intensity")))
+    val got = slice.rows.get.select("site_no", "time")
+      .as[(Int, java.sql.Timestamp)].collect().toSet
+    assert(got === Set(
+      (1, T("2024-01-01 00:00:00")), (1, T("2024-01-01 01:00:00")),
+      (2, T("2024-01-03 00:00:00")), (2, T("2024-01-03 01:00:00")),
+      (2, T("2024-01-05 00:00:00"))))
+    assert(slice.sites === Some(Set("1", "2")))
   }
 
   /** Level-chain inputs for one site: `hours` hourly raw rows from Jan 1

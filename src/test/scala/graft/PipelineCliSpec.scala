@@ -221,4 +221,139 @@ class PipelineCliSpec extends SparkSpec {
     assert(files() === once,
       "a healthy table must not be rewritten (same inodes survive)")
   }
+
+  private val H = 3600L * 1000L
+  private val base = T("2024-03-01 00:00:00").getTime
+  private def at(h: Int, minute: Int = 0) =
+    new java.sql.Timestamp(base + h * H + minute * 60000L)
+
+  /** Writes raw, stations and SILO for `sites` over `hours` hourly rows
+    * from `base`, plus `intensity` (site, time, intensity or null), under
+    * `in` with a (site_no, day)-partitioned intensity store, and the same
+    * tables under `flat` with a flat one, which [[wholeRun]] reads whole.
+    */
+  private def writeLevelInputs(in: String, flat: String, rnd: scala.util.Random,
+      sites: Seq[Int], hours: Int,
+      intensity: Seq[(Int, java.sql.Timestamp, Option[Double])]): Unit = {
+    import spark.implicits._
+    // externals missing on some rows, so SILO decides their wv_corr
+    val raw = for (s <- sites; h <- 0 until hours) yield {
+      val ext = if (rnd.nextDouble() < 0.3) 0.0 else 1.0
+      (s, at(h), 70L + rnd.nextInt(3), 12.0, 1000.0, 1005.0, 20.0 * ext,
+        50.0 * ext, 0.0, 20.0, 30.0, 21.0, 31.0, 0.1, 0.2, 0.3, 0)
+    }
+    // a morning row each day (level2 picks the last before noon), and
+    // some afternoon ones
+    val silo = for {
+      s <- sites
+      d <- 0 until hours / 24
+      h <- Seq(rnd.nextInt(12)) ++ Seq(12 + rnd.nextInt(12)).filter(_ => rnd.nextBoolean())
+    } yield (s, at(24 * d + h, rnd.nextInt(60)),
+      10.0 + rnd.nextInt(20), 30.0 + rnd.nextInt(60))
+    val tables = Seq(
+      "raw_values" -> raw.toDF("site_no", "time", "count", "battery",
+        "pressure1", "pressure2", "external_temperature",
+        "external_humidity", "rain", "internal_temperature",
+        "internal_humidity", "tube_temperature", "tube_humidity", "vwc1",
+        "vwc2", "vwc3", "flag"),
+      "stations" -> sites.map(s => graft.operators.LevelPipeline.Station(
+        s, 0.01, 1000.0, 100.0, 1.0, 1.0, 100.0, 1.0, 0.05, 0.05)).toDF(),
+      "silo_data" -> silo.toDF("site_no", "time", "average_temperature",
+        "average_humidity"))
+    for ((name, df) <- tables; dir <- Seq(in, flat))
+      df.write.parquet(s"$dir/$name")
+    val stored = intensity.map { case (s, t, v) => (s, t, v, 0) }
+      .toDF("site_no", "time", "intensity", "bad_data_flag")
+    graft.operators.IncrementalRunner.upsertByDay(stored, s"$in/intensity")
+    stored.write.parquet(s"$flat/intensity")
+  }
+
+  private def levelsOutput(out: String) = {
+    val df = graft.operators.IncrementalRunner.readLevel(spark, out)
+    df.select(df.columns.sorted.map(org.apache.spark.sql.functions.col)
+      .toIndexedSeq: _*).collect().toSet
+  }
+
+  private def levelsRun(in: String, out: String, now: java.sql.Timestamp,
+      days: Int, pad: Long, site: Option[Int]) = {
+    PipelineCli.run(spark, PipelineCli.Config(input = in, output = out,
+      backprocessDays = Some(days), now = Some(now), padSeconds = pad,
+      site = site))
+    levelsOutput(out)
+  }
+
+  /** The same levels run over the flat copy's whole tables. */
+  private def wholeRun(flat: String, out: String, now: java.sql.Timestamp,
+      days: Int, pad: Long, site: Option[Int]) = {
+    import org.apache.spark.sql.functions.col
+    def table(name: String) = {
+      val df = spark.read.parquet(s"$flat/$name")
+      site.fold(df)(s => df.filter(col("site_no") === s))
+    }
+    graft.operators.IncrementalRunner.processLevelsIncremental(
+      table("raw_values"), spark.read.parquet(s"$flat/stations"),
+      table("silo_data"), table("intensity"), out, now, days, pad)
+    levelsOutput(out)
+  }
+
+  test("a levels run over a day-partitioned intensity store writes what " +
+    "the same run writes from a flat copy read whole, over random stores") {
+    val hours = 40 * 24
+    for (trial <- 0 until 3) {
+      val rnd = new scala.util.Random(11 + trial)
+      val nowH = 24 * (28 + rnd.nextInt(5)) + 1 + rnd.nextInt(23)
+      val now = at(nowH, rnd.nextInt(60))
+      val days = 2 + rnd.nextInt(4)
+      val pad = Seq(6 * 3600L, 30 * 3600L, 0L)(trial)
+      val site = if (trial == 1) Some(3) else None
+      // the window's first hour, the padded one, and the first hour the
+      // bounded read takes: the start of the day before padStart's day
+      val startH = (nowH - 24 * days) / 24 * 24
+      val padH = startH - (pad / 3600).toInt
+      val firstH = (padH / 24 - 1) * 24
+      def v() = Some(80.0 + rnd.nextInt(40))
+      def rows(s: Int, from: Int, until: Int, p: Double,
+          value: () => Option[Double] = () => v()) =
+        (from until until).filter(_ => rnd.nextDouble() < p)
+          .map(h => (s, at(h, 15 * rnd.nextInt(4)), value()))
+      val intensity =
+        // 1: hourly with holes and nulls
+        rows(1, 0, hours, 0.8, () => if (rnd.nextDouble() < 0.1) None else v()) ++
+          // 2: a gap longer than the window, then rows after now
+          rows(2, 0, firstH - 24 * (3 + rnd.nextInt(6)), 0.5) ++
+          rows(2, nowH + 30, hours, 0.5) ++
+          // 3: the three days before the bounded read hold only nulls, so
+          //    the seek steps back over them; rows again late in the window
+          rows(3, 0, firstH - 72, 0.3) ++ rows(3, firstH - 72, firstH, 1.0, () => None) ++
+          rows(3, nowH - 24, hours, 0.5) ++
+          // 4: nothing before the window
+          rows(4, startH + 12, hours, 0.6) ++
+          // 5: only rows dated days after now (6 has no intensity at all)
+          rows(5, nowH + 24 * 6, hours, 0.5)
+      val d = tempDir("graft_cli_bounded_")
+      writeLevelInputs(s"$d/in", s"$d/flat", rnd, 1 to 6, hours, intensity)
+      val want = wholeRun(s"$d/flat", s"$d/out_flat", now, days, pad, site)
+      val got = levelsRun(s"$d/in", s"$d/out", now, days, pad, site)
+      assert(want.map(_.getAs[Int]("site_no")) === site.fold((1 to 6).toSet)(Set(_)))
+      assert(got === want, s"trial $trial: now $now, $days days, pad $pad s")
+    }
+  }
+
+  test("a levels run never opens a day older than its seek day") {
+    val d = tempDir("graft_cli_seek_")
+    val rnd = new scala.util.Random(5)
+    // intensity on days 0-12 and 17-20; the run's bounded read starts on
+    // day 13, so day 12 is its seek day and day 5 is never needed
+    val intensity = ((0 until 13 * 24) ++ (17 * 24 until 21 * 24))
+      .map(h => (1, at(h), Some(80.0 + rnd.nextInt(40))))
+    writeLevelInputs(s"$d/in", s"$d/flat", rnd, Seq(1), 21 * 24, intensity)
+    val junk = java.nio.file.Paths.get(s"$d/in/intensity", "site_no=1",
+      "day=2024-03-06", "part-99999-junk.snappy.parquet")
+    java.nio.file.Files.write(junk, "not a parquet file".getBytes("UTF-8"))
+    intercept[Exception](spark.read.parquet(s"$d/in/intensity").count())
+    val now = at(18 * 24 + 7, 30)
+    val got = levelsRun(s"$d/in", s"$d/out", now, 3, 6 * 3600L, None)
+    assert(got.nonEmpty)
+    assert(got === wholeRun(s"$d/flat", s"$d/out_flat", now, 3, 6 * 3600L, None))
+  }
 }
