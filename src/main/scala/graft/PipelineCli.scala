@@ -265,26 +265,35 @@ object PipelineCli {
   /** The reference's resume-from-last-stored walk, fleet-wide: plan the
     * missing hours per site, execute against the feed table with
     * gap-stop + validation, append to the day-partitioned store. Only the
-    * stored days the walk can touch are read
-    * ([[NmdbCatchup.catchupFromStore]]).
+    * stored days the walk can touch are read, in one keyed pass
+    * ([[NmdbCatchup.catchupObserved]]). Prints one JSON line: the rows
+    * appended and the sites walked, clamped and stopped at a feed gap,
+    * counted in that pass.
     */
   def runNmdbCatchup(spark: SparkSession, c: Config): Unit = {
     val now = c.now.getOrElse(
       new java.sql.Timestamp(System.currentTimeMillis()))
-    def table(path: String) = {
-      val df = spark.read.parquet(path)
-      c.site.fold(df)(s => df.filter(col("site_no") === s))
-    }
-    val appended = NmdbCatchup.catchupFromStore(s"${c.input}/intensity",
-      table(s"${c.input}/raw_values"), table(c.feed), now,
+    val (appended, record) = NmdbCatchup.catchupObserved(s"${c.input}/intensity",
+      inputTable(spark, c, s"${c.input}/raw_values"), inputTable(spark, c, c.feed), now,
       c.maxLookbackHours, c.site)
     // Point upsert, NOT partition overwrite: the appended frame holds only
     // hours >= each site's resume point, so a whole-partition replace would
     // delete previously stored earlier hours of the same day (the reference
     // point-upserts, never deletes — nmdb/influx_db.py:76-147).
     IncrementalRunner.upsertByKey(appended, c.output)
-    println(s"[nmdb-catchup] appended validated intensity hours " +
-      s"(now=$now, lookback=${c.maxLookbackHours}h) to ${c.output}")
+    val counts = Seq("rows_appended", "sites_walked", "sites_clamped",
+      "sites_stopped_at_gap").map(k => s""""$k":${record.get(k)}""")
+    println(s"""{"mode":"nmdb-catchup","now":${jstr(now.toString)},""" +
+      s""""lookback_hours":${c.maxLookbackHours},${counts.mkString(",")}}""")
+  }
+
+  /** An input table, read by [[IncrementalRunner.readTable]] (no
+    * schema-inference job for a flat one) and restricted to
+    * `--site-number` when given.
+    */
+  private def inputTable(spark: SparkSession, c: Config, path: String) = {
+    val df = IncrementalRunner.readTable(spark, path)
+    c.site.fold(df)(s => df.filter(col("site_no") === s))
   }
 
   /** A levels run over the window [[IncrementalRunner.windowStart]] to
@@ -301,12 +310,9 @@ object PipelineCli {
       case Left(err) => throw new IllegalArgumentException(err)
       case Right(d) => d
     }
-    def table(name: String) = {
-      val df = spark.read.parquet(s"${c.input}/$name")
-      c.site.fold(df)(s => df.filter(col("site_no") === s))
-    }
+    def table(name: String) = inputTable(spark, c, s"${c.input}/$name")
     val raw = table("raw_values")
-    val stations = spark.read.parquet(s"${c.input}/stations")
+    val stations = IncrementalRunner.readTable(spark, s"${c.input}/stations")
     val start = IncrementalRunner.windowStart(now, days,
       IncrementalRunner.sessionZone(spark))
     val padStart = IncrementalRunner.padStart(start, c.padSeconds)

@@ -1,12 +1,13 @@
 package graft.operators
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.metadata.ColumnPath
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -69,6 +70,41 @@ object IncrementalRunner {
   def readLevel(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).drop(DayCol)
 
+  /** `spark.read.parquet(path)` for a flat table, without the Spark job
+    * that infers its schema. The schema is the one that inference takes
+    * with `mergeSchema` off: one data file's footer (the Spark schema it
+    * stores, else its parquet schema converted under the session's
+    * settings), read on the driver. A table with partition directories,
+    * with no data file, or read with schema merging on goes to
+    * `spark.read.parquet` unchanged, so its errors stay Spark's own.
+    */
+  def readTable(spark: SparkSession, path: String): DataFrame = {
+    val root = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val sqlConf = spark.sessionState.conf
+    val fs = root.getFileSystem(conf)
+    val first =
+      if (sqlConf.isParquetSchemaMergingEnabled || !fs.exists(root)) None
+      else if (fs.getFileStatus(root).isFile) Some(fs.getFileStatus(root))
+      else {
+        val entries = visibleChildren(fs, root)
+        if (entries.exists(_.isDirectory)) None
+        else entries.sortBy(_.getPath.getName).headOption
+      }
+    first.fold(spark.read.parquet(path)) { file =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+      val footer = try reader.getFooter finally reader.close()
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+        new Footer(file.getPath, footer), new ParquetToSparkSchemaConverter(sqlConf)))
+        .parquet(path)
+    }
+  }
+
+  /** The entries of `dir` that Spark reads: not `_`- or `.`-prefixed. */
+  private def visibleChildren(fs: FileSystem, dir: Path): Seq[FileStatus] =
+    fs.listStatus(dir).toSeq.filterNot(s =>
+      s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+
   /** POINT upsert into a day-partitioned store: like [[upsertByDay]] but
     * rows already stored in the affected (site, day) partitions that do
     * NOT collide on `keyCols` survive the write. This is the reference's
@@ -80,13 +116,17 @@ object IncrementalRunner {
     * a full recompute of every partition it touches (e.g. the NMDB
     * catch-up, which appends only hours >= each site's resume point).
     *
-    * Scale shape: the affected (site, day) pairs are collected from the
-    * materialized append and only those directories are listed and read
+    * Scale shape: the append is materialized once, its affected
+    * (site, day) pairs are collected in one job (a set per partition, no
+    * shuffle), and only those directories are listed and read
     * ([[readPartitions]]), so the cost is O(affected days), not O(store).
-    * The merged frame is then `localCheckpoint`ed (it is bounded by the
-    * affected window, not the store) because a parquet path cannot be
-    * overwritten by a plan that still reads from it; a transactional
-    * table format (MERGE) subsumes this on a production lake.
+    * The append plus the stored rows it does not replace are written
+    * straight from their plan, although that plan reads the directories
+    * the write replaces: [[upsertByDay]]'s dynamic partition overwrite
+    * stages every task's output and swaps the partition directories only
+    * at job commit, after every task has read, and a failed job leaves
+    * them untouched. A transactional table format (MERGE) subsumes this on
+    * a production lake.
     */
   def upsertByKey(
       updated: DataFrame,
@@ -107,13 +147,15 @@ object IncrementalRunner {
         // recompute window): the affected-partition collect, the
         // anti-join build side, and the union each consume it, and
         // without the checkpoint each would re-execute the full upstream
-        // plan — plus the final write may not read the path it overwrites.
+        // plan.
         val u = updated.localCheckpoint(true)
+        import spark.implicits._
         val affected = u
           .select(col(SiteCol).cast("string"),
             date_format(col(tsCol), "yyyy-MM-dd"))
-          .distinct().collect().map(r => (r.getString(0), r.getString(1)))
-          .toSet
+          .as[(String, String)]
+          .mapPartitions(_.toSet.iterator)
+          .collect().toSet
         val slice = readPartitions(spark, path, (s, d) => affected((s, d)),
           u.schema)
         require(slice.sites.isDefined,
@@ -121,10 +163,7 @@ object IncrementalRunner {
         slice.rows.fold(u) { stored =>
           val survivors = stored.join(u.select(keys.map(col): _*), keys,
             "left_anti")
-          // second checkpoint: survivors' lineage still scans `path`, and
-          // the write below overwrites it — break that reference too
           u.unionByName(survivors.select(u.columns.map(col).toIndexedSeq: _*))
-            .localCheckpoint(true)
         }
       }
     upsertByDay(merged, path, tsCol)
@@ -176,9 +215,7 @@ object IncrementalRunner {
     val root = new Path(path)
     val conf = spark.sessionState.newHadoopConf()
     val fs = root.getFileSystem(conf)
-    def children(dir: Path) = fs.listStatus(dir).toSeq
-      .filterNot(s => s.getPath.getName.startsWith("_") ||
-        s.getPath.getName.startsWith("."))
+    def children(dir: Path) = visibleChildren(fs, dir)
     def valueOf(s: FileStatus, key: String): Option[String] = {
       val name = s.getPath.getName
       if (s.isDirectory && name.startsWith(s"$key="))
@@ -196,7 +233,7 @@ object IncrementalRunner {
     val top = if (fs.exists(root)) children(root) else Nil
     val siteDirs = top.flatMap(s => valueOf(s, SiteCol).map(_ -> s.getPath))
     if (siteDirs.isEmpty && top.exists(_.isFile))
-      StoreSlice(Some(spark.read.parquet(path)), None)
+      StoreSlice(Some(readTable(spark, path)), None)
     else {
       val days = siteDirs.map { case (site, dir) =>
         site -> children(dir).flatMap(s => valueOf(s, DayCol).map(_ -> s.getPath))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -18,12 +18,16 @@ import java.time.temporal.ChronoUnit
   * the site), `nmdb/entrypoint.py:122-134` (±20% drift validation).
   *
   * The reference walks one site at a time with one HTTP+DB round-trip per
-  * hour; here the whole fleet's walk is a single plan — per-site resume
-  * states are one aggregation, the hour grids one `sequence` explode, the
-  * gap-stop one running-count window, and validation the existing
-  * secondary-sort fold ([[IntensityOps.flagDrift]]). Nothing is per-row on
-  * the driver, so 10^4 sites x 24 hours and 10 sites x 10 years are the
-  * same plan.
+  * hour; here the whole fleet's walk is a single plan. [[fetchPlan]] and
+  * [[catchupAppend]] state it with joins: per-site resume states are one
+  * aggregation, the hour grids one `sequence` explode, the gap-stop one
+  * running-count window, and validation the secondary-sort fold
+  * ([[IntensityOps.flagDrift]]). The cron's path, [[catchupObserved]]
+  * (and [[catchupFromStore]]), computes the same rows in one keyed
+  * secondary-sort fold over the store slice, the raw fallback and the
+  * feed, so a small catch-up costs a few Spark jobs rather than one per
+  * join and aggregation. Nothing is per-row on the driver, so 10^4 sites
+  * x 24 hours and 10 sites x 10 years are the same plan.
   *
   * Site filtering (the reference's ignore-list, `config.py:9-10`) is the
   * caller's concern: pass pre-filtered inputs.
@@ -176,18 +180,9 @@ object NmdbCatchup {
   }
 
   /** [[fetchPlan]] plus [[catchupAppend]] over the intensity store at
-    * `storePath`, reading only the stored days from [[readBound]] on.
-    *
-    * A (site_no, day)-partitioned store is listed on the driver and read
-    * from the day before the bound's day (the extra day covers a store
-    * written in another time zone), then filtered exactly to
-    * `time >= bound`. A site with stored rows but none that recent resumes
-    * from the bound, which the clamp moves to `nowHour - lookback` as the
-    * site's true last stored hour would; only a site with no stored row at
-    * all falls back to its first raw hour. A flat store is read whole.
-    *
-    * `raw` and `feed` are pre-filtered by the caller; `site`, when given,
-    * restricts the stored rows the same way.
+    * `storePath`, computed in one keyed pass that reads only the stored
+    * days from [[readBound]] on. The same rows as
+    * [[catchupObserved]], without its run record.
     */
   def catchupFromStore(
       storePath: String,
@@ -195,27 +190,189 @@ object NmdbCatchup {
       feed: DataFrame,
       now: java.sql.Timestamp,
       maxLookbackHours: Int = DefaultMaxLookbackHours,
-      site: Option[Int] = None): DataFrame = {
+      site: Option[Int] = None): DataFrame =
+    catchupObserved(storePath, raw, feed, now, maxLookbackHours, site)._1
+
+  /** The rows to append, as [[catchupFromStore]] returns them, and an
+    * observation that holds the run's record once they have been
+    * computed: `rows_appended`, `sites_walked` (sites with hours to
+    * fetch), `sites_clamped` (walks moved forward by the lookback clamp)
+    * and `sites_stopped_at_gap` (walks that ended before `now` at a feed
+    * hour that is missing or has a null intensity). The record is counted
+    * in the pass itself, so it adds no Spark job.
+    *
+    * One keyed pass: the stored rows since the bound, a floor row per
+    * stored site, the raw rows of sites with no stored partition and the
+    * feed rows of the walk's reach (`nowHour - lookback` to `nowHour`) are
+    * unioned as events, repartitioned by site and sorted by (site, kind,
+    * time), and one fold per site derives what [[fetchPlan]] and
+    * [[catchupAppend]] derive with joins, windows and aggregations: the
+    * resume point, the walk ([[planWindow]]), the contiguous prefix of
+    * walked hours whose feed intensity is not null, the seed (the last
+    * stored row with `bad_data_flag = 0` before the walk) and the flags
+    * ([[IntensityOps.validateOrdered]]).
+    *
+    * A (site_no, day)-partitioned store is listed on the driver and read
+    * from the day before the bound's day (the extra day covers a store
+    * written in another time zone), then filtered exactly to
+    * `time >= bound`. A site with stored rows but none that recent resumes
+    * from the bound, which the clamp moves to `nowHour - lookback` as the
+    * site's true last stored hour would; only a site with no stored row at
+    * all falls back to its first raw hour, so `raw` is read only for sites
+    * without a stored partition. A flat store is read whole.
+    *
+    * `site`, when given, restricts the stored, raw and feed rows alike.
+    * Two feed rows for one (site_no, time) in the walk's reach fail the
+    * pass with a [[MalformedFeedException]]: a join would append that hour
+    * twice.
+    */
+  def catchupObserved(
+      storePath: String,
+      raw: DataFrame,
+      feed: DataFrame,
+      now: java.sql.Timestamp,
+      maxLookbackHours: Int = DefaultMaxLookbackHours,
+      site: Option[Int] = None): (DataFrame, Observation) = {
     val spark = raw.sparkSession
     import spark.implicits._
     val zone = IncrementalRunner.sessionZone(spark)
     val bound = readBound(now, zone, maxLookbackHours)
+    val nowHour = java.sql.Timestamp.from(
+      now.toInstant.atZone(zone).truncatedTo(ChronoUnit.HOURS).toInstant)
+    val reach = new java.sql.Timestamp(nowHour.getTime - maxLookbackHours * HourMs)
     val firstDay = bound.toInstant.atZone(zone).toLocalDate.minusDays(1).toString
     val slice = IncrementalRunner.readPartitions(spark, storePath,
       (_, day) => day >= firstDay, StoredSchema)
     val rows = slice.rows.getOrElse(spark.createDataFrame(
       java.util.Collections.emptyList[Row](), StoredSchema))
-    val (stored, floors) = slice.sites match {
-      case Some(sites) => (rows.filter(col("time") >= lit(bound)),
-        sites.toSeq.map(s => (s.toInt, bound)))
-      case None => (rows, Nil) // flat: every stored row is here
-    }
     def ofSite(df: DataFrame) = site.fold(df)(s => df.filter(col("site_no") === s))
-    val resumeFrom = stored.select(col("site_no"), col("time"))
-      .unionByName(floors.toDF("site_no", "time"))
-    val plan = fetchPlan(ofSite(resumeFrom), raw,
-      date_trunc("hour", lit(now)), maxLookbackHours)
-    catchupAppend(ofSite(stored), feed, plan)
+    def events(df: DataFrame, kind: Int, intensity: Column = lit(null),
+        flag: Column = lit(null)) =
+      ofSite(df).select(col("site_no").cast("int").as("site_no"), lit(kind).as("kind"),
+        col("time"), intensity.cast("double").as("intensity"),
+        flag.cast("int").as("bad_data_flag"))
+    val (stored, floors, rawSites) = slice.sites match {
+      case Some(sites) =>
+        // site_no in raw's own type, so that row-group stats can skip it
+        val siteType = raw.schema("site_no").dataType
+        val unstored = if (sites.isEmpty) raw
+          else raw.filter(!col("site_no").isin(sites.toSeq.map(lit(_).cast(siteType)): _*))
+        (rows.filter(col("time") >= lit(bound)),
+          sites.toSeq.map(s => (s.toInt, bound)).toDF("site_no", "time"), unstored)
+      case None => (rows, Seq.empty[(Int, java.sql.Timestamp)].toDF("site_no", "time"), raw)
+    }
+    val nowHourMillis = nowHour.getTime
+    val record = Observation("nmdb_catchup")
+    val appended = Seq(
+      events(stored, Stored, col("intensity"), col("bad_data_flag")),
+      events(floors, Floor),
+      events(rawSites, Raw),
+      events(feed.filter(col("time") >= lit(reach) && col("time") <= lit(nowHour)),
+        Feed, col("intensity")))
+      .reduce(_ unionByName _)
+      .filter(col("site_no").isNotNull && col("time").isNotNull)
+      .as[Event]
+      .repartition(col("site_no"))
+      .sortWithinPartitions(col("site_no"), col("kind"), col("time"))
+      .mapPartitions { it =>
+        val events = it.buffered
+        Iterator.continually(events).takeWhile(_.hasNext).flatMap { es =>
+          val s = es.head.site_no
+          walkSite(s, Iterator.continually(es).takeWhile(e => e.hasNext && e.head.site_no == s)
+            .map(_.next()), nowHourMillis, maxLookbackHours)
+        }
+      }
+      .observe(record,
+        count(when(!col("site_end"), 1)).as("rows_appended"),
+        count(when(col("site_end"), 1)).as("sites_walked"),
+        count(when(col("clamped"), 1)).as("sites_clamped"),
+        count(when(col("stopped_at_gap"), 1)).as("sites_stopped_at_gap"))
+      .where(!col("site_end"))
+      .select(col("site_no"), col("time"), col("intensity"), col("bad_data_flag"))
+    (appended, record)
+  }
+
+  /** Two feed rows for one (site_no, time): the catch-up cannot tell which
+    * one the hour holds.
+    */
+  final class MalformedFeedException(message: String)
+      extends IllegalArgumentException(message)
+
+  /** Event kinds of the keyed pass, in the order a site's events are
+    * sorted: everything that fixes the walk comes before the feed.
+    */
+  private val Stored = 0
+  private val Floor = 1
+  private val Raw = 2
+  private val Feed = 3
+
+  private[operators] final case class Event(site_no: Int, kind: Int, time: java.sql.Timestamp,
+      intensity: Option[Double], bad_data_flag: Option[Int])
+
+  /** A fold's output row: a validated hour, or (`site_end`) the site's
+    * summary for the run record.
+    */
+  private[operators] final case class Walked(site_no: Int, time: java.sql.Timestamp,
+      intensity: Double, bad_data_flag: Int, site_end: Boolean, clamped: Boolean,
+      stopped_at_gap: Boolean)
+
+  /** The per-site fold of [[catchupObserved]], at the defaults of
+    * [[catchupAppend]] (tolerance 0.2, gap [[DefaultMaxGapSeconds]]): one
+    * site's events, sorted by (kind, time), to its appended rows and its
+    * summary row; nothing when the site has no hour to fetch.
+    */
+  private def walkSite(
+      siteNo: Int,
+      events: Iterator[Event],
+      nowHourMillis: Long,
+      maxLookbackHours: Int): Iterator[Walked] = {
+    val es = events.buffered
+    var newest = Option.empty[Long] // newest stored time, floors included
+    var firstRaw = Option.empty[Long]
+    // the last valid stored row, and the last one before the newest time
+    var valid = Option.empty[(Long, Double)]
+    var validBeforeNewest = Option.empty[(Long, Double)]
+    while (es.hasNext && es.head.kind != Feed) {
+      val e = es.next()
+      val t = e.time.getTime
+      e.kind match {
+        case Stored =>
+          if (newest.forall(_ < t)) { validBeforeNewest = valid; newest = Some(t) }
+          if (e.bad_data_flag.contains(0)) e.intensity.foreach(v => valid = Some((t, v)))
+        case Floor => newest = Some(newest.fold(t)(math.max(_, t)))
+        case _ => if (firstRaw.isEmpty) firstRaw = Some(t)
+      }
+    }
+    val window = planWindow(newest, firstRaw, nowHourMillis, maxLookbackHours)
+    var next = window.fold(Long.MaxValue)(_._1)
+    var stopped = false
+    var last = Long.MinValue
+    val hours = Vector.newBuilder[IntensityOps.IntensityPoint]
+    // every feed row is read, so that a duplicate anywhere fails the pass
+    es.foreach { e =>
+      val t = e.time.getTime
+      if (t == last) throw new MalformedFeedException(
+        s"feed holds two rows for site_no $siteNo at ${e.time}")
+      last = t
+      if (!stopped && next <= nowHourMillis) {
+        if (t > next || (t == next && e.intensity.isEmpty)) stopped = true
+        else if (t == next) {
+          hours += IntensityOps.IntensityPoint(siteNo, e.time, e.intensity.get)
+          next += HourMs
+        }
+      }
+    }
+    window.fold(Iterator.empty[Walked]) { case (start, _) =>
+      // rows strictly before the walk: start >= newest (planWindow)
+      val seed = if (newest.exists(_ >= start)) validBeforeNewest else valid
+      val (flagged, _) = IntensityOps.validateOrdered(hours.result().iterator, seed,
+        0.2, DefaultMaxGapSeconds)
+      flagged.iterator.map(p => Walked(p.site_no, p.time, p.intensity, p.bad_data_flag,
+        site_end = false, clamped = false, stopped_at_gap = false)) ++
+        Iterator.single(Walked(siteNo, null, 0.0, 0, site_end = true,
+          clamped = newest.orElse(firstRaw.map(m => m - m % HourMs)).exists(_ < start),
+          stopped_at_gap = next <= nowHourMillis))
+    }
   }
 
   private val StoredSchema = StructType.fromDDL(

@@ -165,6 +165,76 @@ class IncrementalRunnerSpec extends SparkSpec {
     assert(java.nio.file.Files.exists(junk))
   }
 
+  test("an upsertByKey that fails in a task leaves every touched " +
+    "partition as it was and no staging directory behind") {
+    val path = tmpDir()
+    IncrementalRunner.upsertByDay(Seq(
+      (1, T("2024-01-01 10:00:00"), 1.0),
+      (1, T("2024-01-02 10:00:00"), 2.0),
+      (2, T("2024-01-01 10:00:00"), 3.0))
+      .toDF("site_no", "time", "v"), path)
+    def rows() = IncrementalRunner.readLevel(spark, path).select("site_no", "time", "v")
+      .as[(Int, java.sql.Timestamp, Double)].collect().toSet
+    def files() = java.nio.file.Files.walk(java.nio.file.Paths.get(path)).iterator.asScala
+      .map(p => (p.toString, p.toFile.length, p.toFile.lastModified)).toSet
+    val (before, beforeFiles) = (rows(), files())
+    def failing(update: org.apache.spark.sql.DataFrame, cause: String) = {
+      val e = intercept[Exception](IncrementalRunner.upsertByKey(update, path))
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => String.valueOf(c.getMessage).contains(cause)), e)
+      assert(files() === beforeFiles)
+    }
+    // a partial update of all three partitions, one of whose rows throws
+    // (not a local relation, so the error is raised in a task)
+    failing(Seq((1, T("2024-01-01 11:00:00"), 10.0), (1, T("2024-01-02 11:00:00"), 20.0),
+      (2, T("2024-01-01 11:00:00"), -1.0)).toDF("site_no", "time", "v").repartition(2)
+      .withColumn("v", when(col("v") < 0, raise_error(lit("planted failure")))
+        .otherwise(col("v"))), "planted failure")
+    assert(rows() === before)
+    // a stored file of a touched partition that the write's own plan
+    // cannot decode: the failure comes after the write has begun
+    val bad = java.nio.file.Paths.get(path, "site_no=1", "day=2024-01-02",
+      "part-99999-bad.snappy.parquet")
+    val other = tempDir("graft_incr_bad_")
+    Seq(("x", T("2024-01-02 12:00:00"))).toDF("v", "time").coalesce(1).write
+      .mode("overwrite").parquet(other)
+    java.nio.file.Files.copy(new java.io.File(other).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath, bad)
+    def readable() = spark.read.option("basePath", path)
+      .parquet(s"$path/site_no=1/day=2024-01-01", s"$path/site_no=2").count()
+    val (withBad, withBadFiles) = (readable(), files())
+    val e = intercept[Exception](IncrementalRunner.upsertByKey(Seq(
+      (1, T("2024-01-01 11:00:00"), 10.0), (1, T("2024-01-02 11:00:00"), 20.0),
+      (2, T("2024-01-01 11:00:00"), 30.0)).toDF("site_no", "time", "v"), path))
+    // raised inside the partitioned write, not before it
+    assert(e.getStackTrace.exists(_.getMethodName == "upsertByDay"), e)
+    assert(files() === withBadFiles, e)
+    assert(readable() === withBad)
+    assert(!files().exists(f => f._1.contains(".spark-staging") || f._1.contains("_temporary")))
+  }
+
+  test("readTable reads a flat table with the schema Spark infers, and " +
+    "starts no job") {
+    val d = tempDir("graft_readtable_")
+    Seq((1, T("2024-01-01 10:00:00"), 1.5, "a", Option.empty[Long]))
+      .toDF("site_no", "time", "v", "s", "n").write.parquet(s"$d/flat")
+    Seq((1, T("2024-01-01 10:00:00"), 1.5)).toDF("site_no", "time", "v")
+      .write.partitionBy("site_no").parquet(s"$d/partitioned")
+    for (t <- Seq("flat", "partitioned")) {
+      val inferred = spark.read.parquet(s"$d/$t")
+      var read: org.apache.spark.sql.DataFrame = null
+      val jobs = jobsOf { read = IncrementalRunner.readTable(spark, s"$d/$t") }
+      assert(read.schema === inferred.schema, t)
+      assert(read.collect().toSeq === inferred.collect().toSeq, t)
+      if (t == "flat") assert(jobs.isEmpty)
+    }
+    // a directory without data files fails as spark.read.parquet does
+    new java.io.File(s"$d/empty").mkdirs()
+    val want = intercept[Exception](spark.read.parquet(s"$d/empty")).getMessage
+    assert(intercept[Exception](IncrementalRunner.readTable(spark, s"$d/empty"))
+      .getMessage === want)
+  }
+
   test("readPartitions' seek reads a day whose footers lack null counts") {
     val path = tmpDir()
     def day(site: Int, d: String, stats: Boolean, vs: Option[Double]*): Unit =

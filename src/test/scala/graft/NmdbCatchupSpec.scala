@@ -129,48 +129,94 @@ class NmdbCatchupSpec extends SparkSpec {
         // 5: only rows far older than the lookback, plus a recent first
         //    raw row: it must clamp, not fall back to that raw hour
         (0 until 48).map(h => (5, ts(h), v(), 0)) ++
-          // (6 has no stored row: it falls back to its first raw hour)
+          // (6 and 10 have no stored row: they fall back to their first
+          //  raw hour)
           // 7: a stored row in the future: the site is skipped
           Seq((7, ts(nowH - 30), v(), 0), (7, ts(nowH + 3), v(), 0)) ++
           // 8: its seed sits exactly maxGap before the walk start (it
           //    flags the 1.5x first hour); 9: one hour further (ignored)
           Seq((8, ts(10), v(), 0), (8, ts(start - gapH), 100.0, 0),
             (9, ts(10), v(), 0), (9, ts(start - gapH - 1), 100.0, 0))
-      val path = tempDir("graft_nmdb_bound_") + "/intensity"
-      graft.operators.IncrementalRunner.upsertByDay(
-        (histories ++ special).toDF("site_no", "time", "intensity", "bad_data_flag"),
-        path)
-      val firstRaw = Map(5 -> ts(nowH - 2, 13), 6 -> ts(nowH - 5, 17))
-      val raw = (1 to 9).map(s => (s, firstRaw.getOrElse(s, ts(0, 5))))
-        .toDF("site_no", "time")
-      // the first walked hour of each planted site is never a feed gap
-      val walkStart = Map(5 -> start, 6 -> (nowH - 5), 8 -> start, 9 -> start)
-      val feed = (for {
-        s <- 1 to 9
+      val d = tempDir("graft_nmdb_bound_")
+      val stored = (histories ++ special).toDF("site_no", "time", "intensity", "bad_data_flag")
+      graft.operators.IncrementalRunner.upsertByDay(stored, s"$d/intensity")
+      stored.write.parquet(s"$d/flat")
+      // raw from a parquet file, its rows of stored and unstored sites mixed
+      val firstRaw = Map(5 -> ts(nowH - 2, 13), 6 -> ts(nowH - 5, 17), 10 -> ts(nowH - 3, 40))
+      (1 to 10).flatMap(s => Seq(firstRaw.getOrElse(s, ts(0, 5)), ts(nowH - 1, 7)).map(s -> _))
+        .toDF("site_no", "time").coalesce(1).write.parquet(s"$d/raw")
+      val raw = spark.read.parquet(s"$d/raw")
+      // 5 and 8 walk at least 3 hours; 5's fourth hour has a null intensity
+      val walkStart = Map(6 -> (nowH - 5), 10 -> (nowH - 3)) ++
+        Seq(5, 8, 9).map(_ -> start)
+      def planted(s: Int, h: Int) =
+        walkStart.get(s).contains(h) || (Seq(5, 8).contains(s) && h > start && h <= start + 3)
+      val feed = ((for {
+        s <- 1 to 10
         h <- nowH - lookback - 30 to nowH + 5
-        if walkStart.get(s).contains(h) || rnd.nextDouble() > 0.04
+        if planted(s, h) || rnd.nextDouble() > 0.04
       } yield (s, ts(h),
-        if (s >= 8 && h == start) 150.0
-        else if (rnd.nextDouble() < 0.08) 2 * v() else v()))
+        if (s >= 8 && h == start) Some(150.0)
+        else if (s == 5 && h == start + 3) None
+        else if (!planted(s, h) && rnd.nextDouble() < 0.03) None
+        else if (rnd.nextDouble() < 0.08) Some(2 * v()) else Some(v()))) ++
+        // rows off the hour: never walked, and never a gap
+        Seq(5, 8).map(s => (s, ts(start + 1, 30), Some(999.0))) ++
+        (1 to 4).map(s => (s, ts(nowH - rnd.nextInt(lookback), 1 + rnd.nextInt(59)), Some(v()))))
         .toDF("site_no", "time", "intensity")
 
       def rows(df: org.apache.spark.sql.DataFrame) = df
         .select(col("site_no").cast("int"), col("time"), col("intensity"),
           col("bad_data_flag"))
         .as[(Int, java.sql.Timestamp, Double, Int)].collect().toSet
-      val whole = spark.read.parquet(path)
-      val want = rows(NmdbCatchup.catchupAppend(whole, feed,
-        NmdbCatchup.fetchPlan(whole, raw, date_trunc("hour", lit(now)), lookback)))
-      val got = rows(NmdbCatchup.catchupFromStore(path, raw, feed, now, lookback))
-      assert(got === want, s"lookback $lookback, now $now")
+      def reference(site: Option[Int]) = {
+        def of(df: org.apache.spark.sql.DataFrame) =
+          site.fold(df)(s => df.filter(col("site_no") === s))
+        val whole = of(spark.read.parquet(s"$d/flat"))
+        rows(NmdbCatchup.catchupAppend(whole, of(feed), NmdbCatchup.fetchPlan(whole,
+          of(raw), date_trunc("hour", lit(now)), lookback)))
+      }
+      val want = reference(None)
+      for (store <- Seq("intensity", "flat"))
+        assert(rows(NmdbCatchup.catchupFromStore(s"$d/$store", raw, feed, now, lookback)) ===
+          want, s"$store store: lookback $lookback, now $now")
+      // `site` restricts the stored, raw and feed rows alike
+      for (s <- Seq(5, 6, 1 + trial))
+        assert(rows(NmdbCatchup.catchupFromStore(s"$d/intensity", raw, feed, now, lookback,
+          Some(s))) === reference(Some(s)), s"site $s: lookback $lookback, now $now")
       // the planted cases took the path they were planted for
-      def firstOf(s: Int) = want.filter(_._1 == s).minByOption(_._2.getTime)
-      assert(firstOf(5).map(_._2) === Some(ts(start)))
-      assert(firstOf(6).map(_._2) === Some(ts(nowH - 5)))
-      assert(firstOf(7).isEmpty)
-      assert(firstOf(8).map(r => (r._2, r._4)) === Some((ts(start), 1)))
-      assert(firstOf(9).map(r => (r._2, r._4)) === Some((ts(start), 0)))
+      def of(s: Int) = want.toSeq.filter(_._1 == s).sortBy(_._2.getTime)
+      assert(of(5).map(_._2) === (start to start + 2).map(ts(_)))
+      assert(of(6).headOption.map(_._2) === Some(ts(nowH - 5)))
+      assert(of(10).headOption.map(_._2) === Some(ts(nowH - 3)))
+      assert(of(7).isEmpty)
+      assert(of(8).headOption.map(r => (r._2, r._4)) === Some((ts(start), 1)))
+      assert(of(8).map(_._2).take(3) === (start to start + 2).map(ts(_)))
+      assert(of(9).headOption.map(r => (r._2, r._4)) === Some((ts(start), 0)))
+      assert(want.forall(_._2.getTime % H == 0))
     }
   }
-}
 
+  test("a feed with two rows for one (site_no, hour) fails the catch-up " +
+    "by name") {
+    import spark.implicits._
+    val path = tempDir("graft_nmdb_dup_") + "/intensity"
+    val last = new java.sql.Timestamp(base + 10 * H)
+    graft.operators.IncrementalRunner.upsertByDay(
+      Seq((1, last, 100.0, 0)).toDF("site_no", "time", "intensity", "bad_data_flag"), path)
+    val raw = Seq((1, last)).toDF("site_no", "time")
+    val feed = (10 to 14).map(h => (1, new java.sql.Timestamp(base + h * H), 100.0 + h))
+      .:+((1, new java.sql.Timestamp(base + 12 * H), 90.0))
+      .toDF("site_no", "time", "intensity")
+    val now = new java.sql.Timestamp(base + 14 * H)
+    // the join reference accepts it and returns hour 12 twice
+    val whole = spark.read.parquet(path)
+    assert(NmdbCatchup.catchupAppend(whole, feed, NmdbCatchup.fetchPlan(whole, raw,
+      lit(now))).filter(col("time") === new java.sql.Timestamp(base + 12 * H)).count() === 2)
+    val e = intercept[Exception](
+      NmdbCatchup.catchupFromStore(path, raw, feed, now).collect())
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[NmdbCatchup.MalformedFeedException] &&
+      c.getMessage.contains("two rows for site_no 1")), causes.map(_.toString).mkString("\n"))
+  }
+}

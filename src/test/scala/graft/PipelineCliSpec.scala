@@ -64,9 +64,13 @@ class PipelineCliSpec extends SparkSpec {
       (1, T("2024-01-05 12:00:00"), 210.0),
       (1, T("2024-01-05 13:00:00"), 103.0))
       .toDF("site_no", "time", "intensity").write.parquet(feedPath)
-    PipelineCli.runNmdbCatchup(spark, PipelineCli.Config(
+    val printed = new java.io.ByteArrayOutputStream()
+    Console.withOut(printed)(PipelineCli.runNmdbCatchup(spark, PipelineCli.Config(
       input = in, output = out, mode = "nmdb-catchup", feed = feedPath,
-      now = Some(T("2024-01-05 15:30:00"))))
+      now = Some(T("2024-01-05 15:30:00")))))
+    assert(printed.toString("UTF-8").trim === """{"mode":"nmdb-catchup",""" +
+      """"now":"2024-01-05 15:30:00.0","lookback_hours":24,"rows_appended":4,""" +
+      """"sites_walked":1,"sites_clamped":0,"sites_stopped_at_gap":1}""")
     val got = graft.operators.IncrementalRunner.readLevel(spark, out)
       .select("time", "intensity", "bad_data_flag")
       .as[(java.sql.Timestamp, Double, Int)].collect().sortBy(_._1.getTime)
@@ -338,6 +342,46 @@ class PipelineCliSpec extends SparkSpec {
       assert(got === want, s"trial $trial: now $now, $days days, pad $pad s")
     }
   }
+
+  test("job budget: a cron catch-up and a levels run stay within their " +
+    "Spark job counts and start no job from a table read") {
+    import spark.implicits._
+    val d = tempDir("graft_cli_jobs_")
+    val rnd = new scala.util.Random(3)
+    val hours = 8 * 24
+    // sites 1-2 stored up to a few hours before the first catch-up; site 3
+    // has only raw rows, so it resumes from its first raw hour
+    val stored = for (s <- 1 to 2; h <- 0 until hours - 20 - 5 * s)
+      yield (s, at(h), Option(80.0 + rnd.nextInt(40)))
+    writeLevelInputs(s"$d/in", s"$d/flat", rnd, 1 to 3, hours, stored)
+    (for (s <- 1 to 3; h <- 0 until hours) yield (s, at(h), 80.0 + rnd.nextInt(40)))
+      .toDF("site_no", "time", "intensity").write.parquet(s"$d/feed")
+    def catchup(h: Int) = jobsOf(PipelineCli.run(spark, PipelineCli.Config(
+      input = s"$d/in", output = s"$d/in/intensity", mode = "nmdb-catchup",
+      feed = s"$d/feed", now = Some(at(h, 30)))))
+    // two cron cycles: the first clamps site 3's walk, the second resumes
+    // every site from the store the first one wrote
+    val catchups = Seq(catchup(hours - 12), catchup(hours - 1))
+    // every hour up to the last now: site 3's walk began clamped 24 h
+    // before the first now
+    assert(spark.read.parquet(s"$d/in/intensity").count() === 2 * hours + 36)
+    val levels = jobsOf(PipelineCli.run(spark, PipelineCli.Config(input = s"$d/in",
+      output = s"$d/out", backprocessDays = Some(3), now = Some(at(hours - 1, 30)))))
+    assert(levelsOutput(s"$d/out").nonEmpty)
+    def shown(jobs: Seq[SparkSpec.Job]) = jobs.map(_.stageNames.mkString(" | ")).mkString("\n")
+    for (jobs <- catchups) {
+      assert(jobs.size <= CatchupJobs, shown(jobs))
+      assert(!jobs.exists(_.startedByReader), shown(jobs))
+    }
+    assert(levels.size <= LevelsJobs, shown(levels))
+    assert(!levels.exists(_.startedByReader), shown(levels))
+  }
+
+  /** Spark jobs of one catch-up and of one levels run on the fixtures of
+    * the job-budget test: 6 and 10 (both at most the cron budget of 10).
+    */
+  private val CatchupJobs = 6
+  private val LevelsJobs = 10
 
   test("a levels run never opens a day older than its seek day") {
     val d = tempDir("graft_cli_seek_")

@@ -27,10 +27,42 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.toFile
   }
 
+  /** The Spark jobs `body` runs, in the order they started. */
+  def jobsOf(body: => Unit): Seq[SparkSpec.Job] = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkSpec.Job]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(SparkSpec.Job(js.stageInfos.map(_.name), js.stageInfos.map(_.details)))
+        ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq
+  }
+
   override def afterAll(): Unit = super.afterAll()
 }
 
 object SparkSpec {
+  /** One Spark job: its stages' short call sites ("parquet at X.scala:12")
+    * and their long forms (the driver's stack at submission).
+    */
+  final case class Job(stageNames: Seq[String], details: Seq[String]) {
+    /** A job that a `DataFrameReader` call starts by itself, before any
+      * action: a schema inference (or a parallel file listing).
+      */
+    def startedByReader: Boolean =
+      details.exists(_.linesIterator.nextOption().exists(_.contains(".DataFrameReader.")))
+  }
+
   private val cleanupDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
   private lazy val cleanupHook: Unit = {
